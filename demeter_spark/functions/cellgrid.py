@@ -290,6 +290,23 @@ def polyfill_part(
     return cells, full
 
 
+def polyfill_parts(
+    parts: list[list[tuple[np.ndarray, np.ndarray]]], res: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Classified cover of a (multi)polygon: (cells, full), the union of
+    every part's polyfill_part cells. A cell is full if some part covers it
+    fully (multipolygon parts may overlap a cell another part only
+    touches), but never if any part's boundary crosses it."""
+    per_part = [polyfill_part(p, res, classify=True) for p in parts]
+    cells = np.unique(np.concatenate([c for c, _ in per_part]))
+    full = np.zeros(len(cells), dtype=bool)
+    for c, f in per_part:
+        full |= np.isin(cells, c[f])
+    for c, f in per_part:
+        full &= ~np.isin(cells, c[~f])
+    return cells, full
+
+
 def compact(ids: np.ndarray) -> np.ndarray:
     """Minimal mixed-resolution set covering the same area (H3 compact).
 

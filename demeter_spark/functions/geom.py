@@ -507,43 +507,72 @@ def touched_grid_boxes(
     return mix[touched], miy[touched]
 
 
+#: input vertices one batched clip run holds (~8 MB per float64
+#: temporary): clip_parts_to_boxes works through a parcel's (box, ring)
+#: pairs in runs of at most this many vertices, so memory stays bounded
+#: when a many-vertex ring is cut into many cells
+_CLIP_BATCH_VERTS = 1 << 20
+
+
 def _clip_halfplane(
-    xs: np.ndarray, ys: np.ndarray, coord: int, bound: float, keep_le: bool
-) -> Ring:
-    """One Sutherland-Hodgman pass: clip ring against axis-aligned half-plane
-    (coord 0 = x, 1 = y; keep values <= bound if keep_le else >= bound).
-    Vectorized: per-edge emissions assembled with repeat/cumsum indexing."""
-    if len(xs) == 0:
-        return xs, ys
+    xs: np.ndarray, ys: np.ndarray, seg: np.ndarray,
+    coord: int, bound: np.ndarray, keep_le: bool,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One Sutherland-Hodgman pass over many rings at once. Ring k is the
+    run of vertices with seg == k (seg non-decreasing), clipped against the
+    axis-aligned half-plane through bound[k] (coord 0 = x, 1 = y; keep
+    values <= bound if keep_le else >= bound). The next vertex wraps within
+    each ring's run, so every ring comes out exactly as a pass over it
+    alone would clip it. Per-edge emissions are assembled with
+    repeat/cumsum indexing. Callers silence divide/invalid warnings: t is
+    only read where an edge crosses the line."""
+    n = len(xs)
+    if n == 0:
+        return xs, ys, seg
     v = xs if coord == 0 else ys
-    inside = (v <= bound) if keep_le else (v >= bound)
-    nxt = np.arange(1, len(xs) + 1) % len(xs)
+    b = bound[seg]
+    inside = (v <= b) if keep_le else (v >= b)
+    # next vertex: the following one, or the run's first after its last
+    brk = seg[1:] != seg[:-1]
+    is_last = np.append(brk, True)
+    nxt = np.arange(1, n + 1)
+    nxt[is_last] = np.flatnonzero(np.concatenate(([True], brk)))
     in_n = inside[nxt]
     crossing = inside != in_n
     # intersection of each edge with the boundary line
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.where(crossing, (bound - v) / (v[nxt] - v), 0.0)
+    t = np.where(crossing, (b - v) / (v[nxt] - v), 0.0)
     cx = xs + t * (xs[nxt] - xs)
     cy = ys + t * (ys[nxt] - ys)
     if coord == 0:
-        cx = np.where(crossing, bound, cx)  # exact on the clip line
+        cx = np.where(crossing, b, cx)  # exact on the clip line
     else:
-        cy = np.where(crossing, bound, cy)
+        cy = np.where(crossing, b, cy)
     # per edge: [intersection if crossing] + [next vertex if next inside]
     counts = crossing.astype(np.int64) + in_n.astype(np.int64)
     total = int(counts.sum())
-    if total == 0:
-        return np.empty(0), np.empty(0)
     out_x = np.empty(total)
     out_y = np.empty(total)
-    start = np.concatenate([[0], np.cumsum(counts)[:-1]])
+    start = np.cumsum(counts) - counts
     put_cross = start[crossing]
     out_x[put_cross] = cx[crossing]
     out_y[put_cross] = cy[crossing]
-    put_next = start[in_n] + crossing[in_n].astype(np.int64)
+    put_next = start[in_n] + crossing[in_n]
     out_x[put_next] = xs[nxt][in_n]
     out_y[put_next] = ys[nxt][in_n]
-    return out_x, out_y
+    return out_x, out_y, np.repeat(seg, counts)
+
+
+def _clip_rings_to_boxes(
+    xs: np.ndarray, ys: np.ndarray, seg: np.ndarray,
+    x0: np.ndarray, y0: np.ndarray, x1: np.ndarray, y1: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The 4 Sutherland-Hodgman passes: ring k (vertices seg == k) clipped
+    to the box (x0[k], y0[k], x1[k], y1[k])."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xs, ys, seg = _clip_halfplane(xs, ys, seg, 0, x1, True)
+        xs, ys, seg = _clip_halfplane(xs, ys, seg, 0, x0, False)
+        xs, ys, seg = _clip_halfplane(xs, ys, seg, 1, y1, True)
+        return _clip_halfplane(xs, ys, seg, 1, y0, False)
 
 
 def clip_ring_box(
@@ -556,17 +585,136 @@ def clip_ring_box(
     stays exact for points strictly inside the box)."""
     xs = np.asarray(xs, dtype=np.float64)
     ys = np.asarray(ys, dtype=np.float64)
-    xs, ys = _clip_halfplane(xs, ys, 0, x1, True)
-    xs, ys = _clip_halfplane(xs, ys, 0, x0, False)
-    xs, ys = _clip_halfplane(xs, ys, 1, y1, True)
-    xs, ys = _clip_halfplane(xs, ys, 1, y0, False)
-    return xs, ys
+    box = [np.array([a], dtype=np.float64) for a in (x0, y0, x1, y1)]
+    cx, cy, _ = _clip_rings_to_boxes(
+        xs, ys, np.zeros(len(xs), dtype=np.int64), *box
+    )
+    return cx, cy
 
 
 def parts_bboxes(parts: list[list[Ring]]) -> list[list[tuple]]:
-    """Per-ring bboxes, computed ONCE per polygon so per-cell clipping can
-    prescreen rings in O(1) instead of touching all vertices."""
+    """Per-ring bboxes, computed ONCE per polygon so clipping can prescreen
+    (box, ring) pairs without touching any vertex."""
     return [[ring_bbox(xs, ys) for xs, ys in rings] for rings in parts]
+
+
+def clip_parts_to_boxes(
+    parts: list[list[Ring]],
+    x0: np.ndarray, y0: np.ndarray, x1: np.ndarray, y1: np.ndarray,
+    bboxes: list[list[tuple]] | None = None,
+) -> list[np.ndarray]:
+    """Clip a (multi)polygon to many boxes at once: one pack_polygons array
+    per box (x0[j], y0[j], x1[j], y1[j]). Even-odd parity w.r.t. the
+    clipped rings equals parity w.r.t. the originals for any point strictly
+    inside the box, so PIP semantics are preserved per cell.
+
+    Every (box, ring) pair goes through the same four segment-flattened
+    Sutherland-Hodgman passes together, so a parcel cut into thousands of
+    boundary cells costs a few numpy passes, not a Python call per cell.
+
+    A ring that clips to fewer than 3 vertices either misses the box
+    (parity 0 — dropped) or CONTAINS the whole box (parity 1 everywhere —
+    e.g. the outer ring of a part whose hole crosses this cell): a
+    centre-in-ring test tells them apart, and the box itself stands in for
+    a containing ring. With ``bboxes`` (parts_bboxes) a ring whose bbox
+    misses a box costs no vertex work for it, and only a ring whose bbox
+    covers the box gets the centre test."""
+    x0, y0, x1, y1 = (
+        np.atleast_1d(np.asarray(a, dtype=np.float64)) for a in (x0, y0, x1, y1)
+    )
+    nb = len(x0)
+    rings = [r for rs in parts for r in rs]
+    ring_part = np.repeat(np.arange(len(parts)), [len(rs) for rs in parts])
+    # candidate (box, ring) pairs, box-major: each box's rings keep their
+    # part/ring order, which is the order they are packed in
+    if bboxes is None:
+        hit = may_contain = np.ones((nb, len(rings)), dtype=bool)
+    else:
+        rx0, ry0, rx1, ry1 = np.array(
+            [bb for rbb in bboxes for bb in rbb], dtype=np.float64
+        ).reshape(len(rings), 4).T
+        hit = ~(
+            (rx1 < x0[:, None]) | (rx0 > x1[:, None])
+            | (ry1 < y0[:, None]) | (ry0 > y1[:, None])
+        )
+        may_contain = (
+            (rx0 <= x0[:, None]) & (ry0 <= y0[:, None])
+            & (rx1 >= x1[:, None]) & (ry1 >= y1[:, None])
+        )
+    pb, pr = np.nonzero(hit)
+    may_contain = may_contain[pb, pr]
+    n_pairs = len(pb)
+
+    # gather each pair's ring vertices; clip in runs of bounded size
+    lens = np.array([len(xs) for xs, _ in rings], dtype=np.int64)
+    first = np.cumsum(lens) - lens
+    allx, ally = (
+        np.concatenate([np.asarray(r[i], dtype=np.float64) for r in rings] or [[]])
+        for i in (0, 1)
+    )
+    plen = lens[pr]
+    run = (np.cumsum(plen) - 1) // _CLIP_BATCH_VERTS
+    cuts = [0, *(np.flatnonzero(run[1:] != run[:-1]) + 1).tolist(), n_pairs]
+    bx0, by0, bx1, by1 = x0[pb], y0[pb], x1[pb], y1[pb]
+    clipped = []
+    for lo, hi in zip(cuts[:-1], cuts[1:]):
+        pl = plen[lo:hi]
+        seg = np.repeat(np.arange(lo, hi), pl)
+        pos = np.arange(len(seg)) + np.repeat(
+            first[pr[lo:hi]] - (np.cumsum(pl) - pl), pl
+        )
+        clipped.append(_clip_rings_to_boxes(
+            allx[pos], ally[pos], seg, bx0, by0, bx1, by1
+        ))
+    cx, cy, cseg = (np.concatenate(c) for c in zip(*clipped))
+
+    cnt = np.bincount(cseg, minlength=n_pairs)
+    kept = cnt >= 3
+    boxed = np.zeros(n_pairs, dtype=bool)
+    fb = np.flatnonzero(~kept & may_contain)
+    mx = (bx0[fb] + bx1[fb]) * 0.5
+    my = (by0[fb] + by1[fb]) * 0.5
+    for r in np.unique(pr[fb]):
+        sel = pr[fb] == r
+        boxed[fb[sel]] = points_in_ring(mx[sel], my[sel], *rings[r])
+
+    # pack_polygons layout for every box in one flat array: per box
+    # [n_parts], per kept part [n_rings], per kept ring [n, xs, ys]. A
+    # ring's offset counts the box headers, part headers and rings before
+    # it; a part's header sits just before its first ring.
+    item = np.flatnonzero(kept | boxed)
+    n = np.where(kept, cnt, 4)[item]
+    ib = pb[item]
+    ip = ring_part[pr[item]]
+    new_part = np.ones(len(item), dtype=bool)
+    new_part[1:] = (ib[1:] != ib[:-1]) | (ip[1:] != ip[:-1])
+    g = np.cumsum(new_part) - 1
+    size = 1 + 2 * n
+    before = np.cumsum(size) - size
+    item_off = (ib + 1) + (g + 1) + before
+    box_parts = np.bincount(ib[new_part], minlength=nb)
+    box_size = 1 + box_parts + np.bincount(ib, weights=size, minlength=nb)
+    box_off = (np.cumsum(box_size) - box_size).astype(np.int64)
+    flat = np.empty(int(box_size.sum()))
+    flat[box_off] = box_parts
+    flat[item_off[new_part] - 1] = np.bincount(g, minlength=new_part.sum())
+    flat[item_off] = n
+    # clipped vertices of the kept rings, at their index within the ring
+    item_of = np.zeros(n_pairs, dtype=np.int64)
+    item_of[item] = np.arange(len(item))
+    m = kept[cseg]
+    vseg = cseg[m]
+    it = item_of[vseg]
+    j = np.arange(len(vseg)) - np.searchsorted(vseg, vseg)
+    flat[item_off[it] + 1 + j] = cx[m]
+    flat[item_off[it] + 1 + n[it] + j] = cy[m]
+    # box corners for the rings that contain their box
+    bi = np.flatnonzero(boxed[item])
+    b = ib[bi]
+    at = item_off[bi, None] + 1 + np.arange(4)
+    flat[at] = np.stack([x0[b], x1[b], x1[b], x0[b]], axis=1)
+    flat[at + 4] = np.stack([y0[b], y0[b], y1[b], y1[b]], axis=1)
+    return np.split(flat, box_off)[1:]
 
 
 def clip_parts_to_box(
@@ -574,40 +722,11 @@ def clip_parts_to_box(
     x0: float, y0: float, x1: float, y1: float,
     bboxes: list[list[tuple]] | None = None,
 ) -> list[list[Ring]]:
-    """Clip a (multi)polygon to a box, ring by ring. Even-odd parity w.r.t.
-    the clipped rings equals parity w.r.t. the originals for any point
-    strictly inside the box, so PIP semantics are preserved per cell.
-
-    A ring that clips to nothing either misses the box entirely (parity 0 —
-    dropped) or CONTAINS the whole box (parity 1 everywhere — e.g. the outer
-    ring of a part whose hole crosses this cell): represented by the box
-    itself so downstream parity stays correct."""
-    box = (
-        np.array([x0, x1, x1, x0]),
-        np.array([y0, y0, y1, y1]),
+    """Clip a (multi)polygon to one box: clip_parts_to_boxes for a single
+    box, unpacked to parts of rings."""
+    return unpack_polygons(
+        clip_parts_to_boxes(parts, x0, y0, x1, y1, bboxes=bboxes)[0]
     )
-    cx = np.array([(x0 + x1) * 0.5])
-    cy = np.array([(y0 + y1) * 0.5])
-    out: list[list[Ring]] = []
-    for pi, rings in enumerate(parts):
-        kept: list[Ring] = []
-        for ri, (xs, ys) in enumerate(rings):
-            may_contain = True
-            if bboxes is not None:
-                bx0, by0, bx1, by1 = bboxes[pi][ri]
-                if bx1 < x0 or bx0 > x1 or by1 < y0 or by0 > y1:
-                    continue  # bbox disjoint: parity 0, zero vertex work
-                may_contain = bx0 <= x0 and by0 <= y0 and bx1 >= x1 and by1 >= y1
-            c = clip_ring_box(xs, ys, x0, y0, x1, y1)
-            if len(c[0]) >= 3:
-                kept.append(c)
-            elif may_contain and points_in_ring(
-                cx, cy, np.asarray(xs), np.asarray(ys)
-            )[0]:
-                kept.append(box)
-        if kept:
-            out.append(kept)
-    return out
 
 
 def pack_polygons(parts: list[list[Ring]]) -> np.ndarray:

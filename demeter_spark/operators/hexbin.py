@@ -72,25 +72,24 @@ def hex_bin_multi(
     Hexagons have no exact parent/child hierarchy (H3's aperture-7 rollup
     is approximate — public knowledge), so unlike the quad tile pyramid
     (operators/tilepyramid.py) coarser levels can NOT be re-aggregated
-    from finer ones exactly. Instead each point is assigned at every
-    requested resolution via a Catalyst array of (res, id) structs,
-    exploded BEFORE the single hash aggregate: one Exchange total for all
-    levels, map-side combined. The explode multiplies rows by
+    from finer ones exactly. Instead each point's id at every requested
+    resolution is computed once, side by side in one Project, where
+    whole-stage codegen eliminates the subexpressions the levels share;
+    ``stack`` then turns the ids into (res, hex_id) rows BEFORE the single
+    hash aggregate: one Exchange total for all levels, map-side combined.
+    (Inside the generator itself the id arithmetic would get no
+    subexpression elimination.) The stack multiplies rows by
     len(resolutions) in the map stage only — post-combine reduce traffic
     is one row per occupied (res, hex), dimension-sized at any scale.
     """
-    assignments = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("res"),
-                su.hex_of(F.col(lon_col), F.col(lat_col), r).alias("hex_id"),
-            )
-            for r in resolutions
-        ]
-    )
+    ids = [
+        su.hex_of(F.col(lon_col), F.col(lat_col), r).alias(f"_h{i}")
+        for i, r in enumerate(resolutions)
+    ]
+    pairs = ", ".join(f"{r}, _h{i}" for i, r in enumerate(resolutions))
     return (
-        points.select(F.explode(assignments).alias("a"))
-        .select("a.res", "a.hex_id")
+        points.select(*ids)
+        .selectExpr(f"stack({len(resolutions)}, {pairs}) AS (res, hex_id)")
         .groupBy("res", "hex_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -68,16 +68,7 @@ def parcel_covers(
             rings: list = []
             for pid, wkt in zip(pdf["parcel_id"], pdf["geom_wkt"]):
                 parts = geom.parse_wkt_polygons(wkt)
-                per_ring = [cg.polyfill_part(p_, res, classify=True) for p_ in parts]
-                cs = np.unique(np.concatenate([c for c, _ in per_ring]))
-                # full in the union if full in any part (multipolygon parts
-                # may overlap a cell another part only touches)
-                full = np.zeros(len(cs), dtype=bool)
-                for c, f in per_ring:
-                    full |= np.isin(cs, c[f])
-                # ...but never full if any part's boundary crosses it
-                for c, f in per_ring:
-                    full &= ~np.isin(cs, c[~f])
+                cs, full = cg.polyfill_parts(parts, res)
                 if compact:
                     fc = cg.compact(cs[full])
                     bc = cs[~full]
@@ -90,28 +81,23 @@ def parcel_covers(
                 fulls.append(full)
                 if with_rings:
                     # geometry is CLIPPED to each boundary cell before
-                    # packing (Sutherland-Hodgman to the cell box + epsilon):
-                    # a cover row carries only the handful of vertices that
-                    # cross its own cell, so Arrow transfer and PIP cost per
-                    # candidate are O(local boundary), independent of the
-                    # parcel's total vertex count. The epsilon expansion
-                    # keeps points that sit exactly ON a cell edge strictly
-                    # interior to the clip box (parity stays exact).
-                    bx0, by0, bx1, by1 = cg.cell_bounds(cs)
-                    rbb = geom.parts_bboxes(parts)  # once per parcel
-                    for j in range(len(cs)):
-                        if full[j]:
-                            rings.append(None)
-                        else:
-                            ex = (bx1[j] - bx0[j]) * 1e-9
-                            ey = (by1[j] - by0[j]) * 1e-9
-                            clipped = geom.clip_parts_to_box(
-                                parts,
-                                bx0[j] - ex, by0[j] - ey,
-                                bx1[j] + ex, by1[j] + ey,
-                                bboxes=rbb,
-                            )
-                            rings.append(geom.pack_polygons(clipped))
+                    # packing (Sutherland-Hodgman to the cell box +
+                    # epsilon), all of the parcel's boundary cells in one
+                    # batched call: a cover row carries only the handful of
+                    # vertices that cross its own cell, so Arrow transfer
+                    # and PIP cost per candidate are O(local boundary),
+                    # independent of the parcel's total vertex count. The
+                    # epsilon expansion keeps points that sit exactly ON a
+                    # cell edge strictly interior to the clip box (parity
+                    # stays exact).
+                    bx0, by0, bx1, by1 = cg.cell_bounds(cs[~full])
+                    ex = (bx1 - bx0) * 1e-9
+                    ey = (by1 - by0) * 1e-9
+                    clipped = iter(geom.clip_parts_to_boxes(
+                        parts, bx0 - ex, by0 - ey, bx1 + ex, by1 + ey,
+                        bboxes=geom.parts_bboxes(parts),
+                    ))
+                    rings.extend(None if f else next(clipped) for f in full)
             if cells:
                 out = {
                     "parcel_id": np.asarray(ids, dtype=np.int64),
@@ -279,42 +265,53 @@ def pack_geometry(parcels: DataFrame) -> DataFrame:
     )
 
 
+def _topk_columns(d: np.ndarray, kk: int) -> np.ndarray:
+    """Column indices of each row's ``kk`` smallest entries ordered by
+    (value, column): the first ``kk`` of a stable argsort of the row, with
+    NaN last. A partial selection finds each row's kth value; only the
+    entries at or below it are sorted. A row whose kth value is NaN keeps
+    all its entries."""
+    kth = np.partition(d, kk - 1, axis=1)[:, kk - 1]
+    r, c = np.nonzero((d <= kth[:, None]) | np.isnan(kth)[:, None])
+    order = np.lexsort((c, d[r, c], r))
+    n_cand = np.bincount(r, minlength=len(d))
+    first = np.cumsum(n_cand) - n_cand
+    return c[order[(first[:, None] + np.arange(kk)).ravel()]].reshape(len(d), kk)
+
+
 def _knn_map_only(
     points: DataFrame,
     sites: DataFrame,
+    site_pdf: pd.DataFrame,
     k: int,
     id_col: str,
     site_id: str,
 ) -> DataFrame:
     """Exact kNN as ONE map-only pass: the site dimension (already small
-    enough that the ring path broadcasts it wholesale) is shipped to tasks
-    as numpy arrays and each point's top-k is computed in a vectorized
-    kernel — zero Exchange, zero Window, one job, versus the ring path's
-    per-level window shuffle + cache + count + checkpoint (r07: at bench
-    shape the lattice machinery was pure fixed overhead, ~2.6 s for 5k
-    points against a 200-row gazetteer).
+    enough that the ring path broadcasts it wholesale, and collected by the
+    caller) is shipped to tasks as numpy arrays and each point's top-k is
+    computed in a vectorized kernel — zero Exchange, zero Window, one job,
+    versus the ring path's per-level window shuffle + cache + count +
+    checkpoint (r07: at bench shape the lattice machinery was pure fixed
+    overhead, ~2.6 s for 5k points against a 200-row gazetteer).
 
     Ordering/values are bit-identical to the ring path: dist =
     sqrt(dx*dx + dy*dy) in IEEE float64 with the same operation order, ties
-    broken by ascending site id via a stable argsort over sid-sorted
-    columns. Requires unique point ids (the same contract the window
-    partitioning already implied)."""
-    import numpy as np
-    import pandas as pd
+    broken by ascending site id: columns are sid-sorted and each row's
+    top-k is ordered by (dist, column). Requires unique point ids (the
+    same contract the window partitioning already implied)."""
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
     spark = points.sparkSession
-    # dimension-sized collect (same memory class as the ring path's
-    # unconditional F.broadcast(site_cells)); sorted by sid so stable
-    # argsort on distance alone realizes (dist asc, sid asc)
-    rows = sites.select(site_id, "lon", "lat").collect()
-    rows.sort(key=lambda r: r[0])
-    sid_arr = np.asarray([r[0] for r in rows])
-    slon = np.asarray([r[1] for r in rows], dtype=np.float64)
-    slat = np.asarray([r[2] for r in rows], dtype=np.float64)
+    # dimension-sized (same memory class as the ring path's unconditional
+    # F.broadcast(site_cells)); sorted by sid so the column order breaks
+    # distance ties
+    site_pdf = site_pdf.iloc[np.argsort(site_pdf[site_id].to_numpy(), kind="stable")]
+    sid_arr = site_pdf[site_id].to_numpy()
+    slon = site_pdf["lon"].to_numpy(dtype=np.float64)
+    slat = site_pdf["lat"].to_numpy(dtype=np.float64)
     bc = spark.sparkContext.broadcast((sid_arr, slon, slat))
-    n_sites = len(rows)
-    kk = min(k, n_sites)
+    kk = min(k, len(sid_arr))
 
     out_schema = StructType(
         [
@@ -340,8 +337,7 @@ def _knn_map_only(
                 dx = plon[lo:hi, None] - lon_s[None, :]
                 dy = plat[lo:hi, None] - lat_s[None, :]
                 d = np.sqrt(dx * dx + dy * dy)
-                # stable sort: equal distances keep column (= sid) order
-                idx = np.argsort(d, axis=1, kind="stable")[:, :kk]
+                idx = _topk_columns(d, kk)
                 p = idx.shape[0]
                 yield pd.DataFrame(
                     {
@@ -410,11 +406,19 @@ def knn_join(
     # site dimension anyway (site_cells), so whenever that dimension is
     # small enough to also live as per-task numpy arrays, the lattice
     # levels buy nothing — the exact top-k is one vectorized map pass with
-    # identical ordering and bit-identical distances. The count probe is a
-    # dimension-sized job; pass map_only_sites=0 to force the ring path
-    # (property tests pin both paths equal).
-    if map_only_sites and sites.count() <= map_only_sites:
-        return _knn_map_only(points, sites, k, id_col, site_id)
+    # identical ordering and bit-identical distances. One bounded collect
+    # of at most map_only_sites + 1 site rows both decides the path and,
+    # when they fit, is the dimension the fast path ships — no separate
+    # count job. Pass map_only_sites=0 to force the ring path (property
+    # tests pin both paths equal).
+    if map_only_sites:
+        site_pdf = (
+            sites.select(site_id, "lon", "lat")
+            .limit(map_only_sites + 1)
+            .toPandas()
+        )
+        if len(site_pdf) <= map_only_sites:
+            return _knn_map_only(points, sites, site_pdf, k, id_col, site_id)
 
     lat_sz = 180.0 / (1 << res)
     site_cells = F.broadcast(

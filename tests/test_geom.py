@@ -237,3 +237,155 @@ def test_points_in_packed_grouped_flat_matches_looped_reference():
             inside |= part_in
         want[idx] = inside
     assert got.tolist() == want.tolist()
+
+
+# --- clip_parts_to_boxes vs the per-box, per-ring loop it replaced --------
+# The oracle below is the earlier implementation, kept verbatim in
+# behaviour: one Sutherland-Hodgman call per (ring, box), the bbox
+# prescreen, the may_contain -> box fallback and the < 3 vertex drop.
+
+
+def _oracle_halfplane(xs, ys, coord, bound, keep_le):
+    if len(xs) == 0:
+        return xs, ys
+    v = xs if coord == 0 else ys
+    inside = (v <= bound) if keep_le else (v >= bound)
+    nxt = np.arange(1, len(xs) + 1) % len(xs)
+    in_n = inside[nxt]
+    crossing = inside != in_n
+    with np.errstate(divide="ignore", invalid="ignore"):
+        t = np.where(crossing, (bound - v) / (v[nxt] - v), 0.0)
+    cx = xs + t * (xs[nxt] - xs)
+    cy = ys + t * (ys[nxt] - ys)
+    if coord == 0:
+        cx = np.where(crossing, bound, cx)
+    else:
+        cy = np.where(crossing, bound, cy)
+    counts = crossing.astype(np.int64) + in_n.astype(np.int64)
+    total = int(counts.sum())
+    if total == 0:
+        return np.empty(0), np.empty(0)
+    out_x = np.empty(total)
+    out_y = np.empty(total)
+    start = np.concatenate([[0], np.cumsum(counts)[:-1]])
+    put_cross = start[crossing]
+    out_x[put_cross] = cx[crossing]
+    out_y[put_cross] = cy[crossing]
+    put_next = start[in_n] + crossing[in_n].astype(np.int64)
+    out_x[put_next] = xs[nxt][in_n]
+    out_y[put_next] = ys[nxt][in_n]
+    return out_x, out_y
+
+
+def _oracle_clip_parts_to_box(parts, x0, y0, x1, y1, bboxes=None):
+    box = (np.array([x0, x1, x1, x0]), np.array([y0, y0, y1, y1]))
+    cx = np.array([(x0 + x1) * 0.5])
+    cy = np.array([(y0 + y1) * 0.5])
+    out = []
+    for pi, rings in enumerate(parts):
+        kept = []
+        for ri, (xs, ys) in enumerate(rings):
+            may_contain = True
+            if bboxes is not None:
+                bx0, by0, bx1, by1 = bboxes[pi][ri]
+                if bx1 < x0 or bx0 > x1 or by1 < y0 or by0 > y1:
+                    continue
+                may_contain = bx0 <= x0 and by0 <= y0 and bx1 >= x1 and by1 >= y1
+            c = (np.asarray(xs, dtype=np.float64), np.asarray(ys, dtype=np.float64))
+            c = _oracle_halfplane(*c, 0, x1, True)
+            c = _oracle_halfplane(*c, 0, x0, False)
+            c = _oracle_halfplane(*c, 1, y1, True)
+            c = _oracle_halfplane(*c, 1, y0, False)
+            if len(c[0]) >= 3:
+                kept.append(c)
+            elif may_contain and geom.points_in_ring(
+                cx, cy, np.asarray(xs), np.asarray(ys)
+            )[0]:
+                kept.append(box)
+        if kept:
+            out.append(kept)
+    return out
+
+
+def _assert_clip_matches_oracle(parts, x0, y0, x1, y1, with_bboxes=True):
+    bb = geom.parts_bboxes(parts) if with_bboxes else None
+    got = geom.clip_parts_to_boxes(parts, x0, y0, x1, y1, bboxes=bb)
+    assert len(got) == len(x0)
+    for j, g in enumerate(got):
+        want = geom.pack_polygons(_oracle_clip_parts_to_box(
+            parts, x0[j], y0[j], x1[j], y1[j], bboxes=bb
+        ))
+        assert g.shape == want.shape, j
+        assert np.array_equal(g.view(np.int64), want.view(np.int64)), j
+
+
+@pytest.mark.parametrize("res", [6, 8, 10])
+def test_clip_parts_to_boxes_bit_identical_on_cover_cells(spark, res):
+    """Every boundary cell of the synthetic parcels, clipped to its
+    epsilon-expanded box exactly as parcel_covers does: the batched kernel
+    packs the same float64 bits as the per-box loop."""
+    from demeter_spark.functions import cellgrid as cg
+    from demeter_spark.sources import synth
+
+    pdf = synth.parcels(spark).select("geom_wkt").toPandas()
+    n_cells = 0
+    for wkt in pdf["geom_wkt"]:
+        parts = geom.parse_wkt_polygons(wkt)
+        cs, full = cg.polyfill_parts(parts, res)
+        bx0, by0, bx1, by1 = cg.cell_bounds(cs[~full])
+        ex = (bx1 - bx0) * 1e-9
+        ey = (by1 - by0) * 1e-9
+        _assert_clip_matches_oracle(parts, bx0 - ex, by0 - ey, bx1 + ex, by1 + ey)
+        n_cells += len(bx0)
+    assert n_cells > {6: 1000, 8: 3000, 10: 14000}[res]
+
+
+def _boxes(*boxes):
+    return tuple(np.array(c, dtype=np.float64) for c in zip(*boxes))
+
+
+@pytest.mark.parametrize("with_bboxes", [True, False])
+def test_clip_parts_to_boxes_bit_identical_edge_cases(with_bboxes):
+    holed = geom.parse_wkt_polygons(
+        "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (4 4, 6 4, 6 6, 4 6, 4 4))"
+    )
+    concave = geom.parse_wkt_polygons(
+        "POLYGON ((0 0, 6 0, 6 6, 4 6, 4 2, 2 2, 2 6, 0 6, 0 0))"
+    )
+    multi = geom.parse_wkt_polygons(
+        "MULTIPOLYGON (((0 0, 3 0, 3 3, 0 3, 0 0)), ((2 2, 5 2, 4 5, 2 2)))"
+    )
+    sliver = [
+        [(np.array([0.0, 4.0, 0.0]), np.array([0.0, 0.0, 4.0]))],
+        [(np.array([1.0, 1.2]), np.array([1.0, 1.2]))],
+    ]
+    cases = [
+        # hole inside the box; outer ring contains the box while the hole
+        # crosses it; box inside the hole; box outside everything; an
+        # inverted box, which clips every ring to nothing, so the outer
+        # ring's centre-in-ring test is what puts the box itself in
+        (holed, _boxes((3, 3, 7, 7), (3.5, 3.5, 5, 5), (4.5, 4.5, 5.5, 5.5),
+                       (1, 1, 2, 2), (11, 11, 12, 12), (-1, -1, 11, 11),
+                       (3, 3, 2, 2))),
+        # the U's arms and notch: one box cut into two pieces by the notch
+        (concave, _boxes((1, 1, 5, 5), (2.5, 3, 3.5, 7), (-1, -1, 7, 1.5),
+                         (3, 0.5, 5, 3))),
+        # two overlapping parts, a box touching only one of them
+        (multi, _boxes((1, 1, 4, 4), (-1, -1, 1, 1), (3.5, 3.5, 4.5, 4.5),
+                       (2.5, 2.5, 2.9, 2.9))),
+        # a box touching the square at one vertex only (Sutherland-Hodgman
+        # keeps boundary points: a degenerate ring of repeated vertices)
+        (multi, _boxes((3, -1, 4, 0), (-2, -2, 0, 0))),
+        # a triangle whose bbox covers the box but whose hypotenuse misses
+        # it, and a two-vertex sliver: < 3 vertices, dropped
+        (sliver, _boxes((3, 3, 4, 4), (0.5, 0.5, 1.5, 1.5), (-1, -1, 5, 5))),
+    ]
+    for parts, (x0, y0, x1, y1) in cases:
+        _assert_clip_matches_oracle(parts, x0, y0, x1, y1, with_bboxes)
+    assert geom.clip_parts_to_boxes(holed, *_boxes((3, 3, 2, 2)))[0].tolist() == [
+        1.0, 1.0, 4.0, 3.0, 2.0, 2.0, 3.0, 3.0, 3.0, 2.0, 2.0
+    ]
+    assert geom.clip_parts_to_boxes(holed, [], [], [], []) == []
+    got = geom.clip_parts_to_boxes(sliver, *_boxes((3, 3, 4, 4), (-1, -1, 5, 5)))
+    assert got[0].tolist() == [0.0]  # nothing kept
+    assert got[1][:3].tolist() == [1.0, 1.0, 3.0]  # the triangle alone

@@ -93,3 +93,8 @@ def test_hex_bin_multi_single_exchange(spark):
     out = hexbin.hex_bin_multi(df, [2, 4, 6, 8])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert len(_SHUFFLE.findall(plan)) <= 2  # input round-robin + ONE agg
+    # the ids are computed once, in the Project below the generator: the
+    # generator only stacks columns and carries none of the id arithmetic
+    gen = [ln for ln in plan.splitlines() if "Generate " in ln]
+    assert len(gen) == 1, plan
+    assert "FLOOR(" not in gen[0], gen[0]

@@ -403,7 +403,12 @@ def test_order_stats_single_shuffle_plan(spark):
     arrays, not extra exchanges or windows."""
     import re
 
-    src = _elev(spark)
+    # the elevation grid generated as the only dataset, so it spans the
+    # whole cluster width: filtered out of the four-dataset table it is one
+    # partition on hosts with fewer than 8 cores, and a one-partition input
+    # needs no shuffle at all (the count would read 0, not 1)
+    src = synth.raster_cells(spark, datasets=(("elevation", 0, 0),))
+    assert src.rdd.getNumPartitions() > 1
     dst = rp.Grid(0.0, 0.0, 1.0, 1.0, 36, 32)
     out = rp.reproject_order_stats(src, SRC, dst, mode_quantize=8.0)
     plan = out._jdf.queryExecution().executedPlan().toString()

@@ -180,6 +180,35 @@ def test_knn_map_only_equals_ring_path(spark):
     assert joins.knn_join(pts.limit(5), tiny, k=5, res=6).count() == 10
 
 
+def test_knn_topk_columns_equals_stable_argsort():
+    """The map-only kernel's partial top-k (np.partition to the kth
+    distance, then a lexsort of the candidates) returns exactly the first
+    k columns of a stable argsort — distance ties broken by column, NaN
+    last, and a row whose kth distance is NaN ordered whole."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    # coarse values: many exact ties, including ties at the kth distance
+    d = rng.integers(0, 12, (400, 60)).astype(np.float64)
+    d[5, :] = 7.0  # one row all tied
+    d[6, ::2] = np.nan  # NaN entries beyond the kth
+    d[7, :] = np.nan  # kth distance NaN: the whole row is ordered
+    d[8, :58] = np.nan  # only two finite entries, k = 3 reaches a NaN
+    for k in (1, 3, 17, 60):
+        want = np.argsort(d, axis=1, kind="stable")[:, :k]
+        got = joins._topk_columns(d, k)
+        assert np.array_equal(got, want), k
+    # real distances, as the kernel computes them
+    px, py = rng.uniform(0, 36, (2, 300))
+    sx, sy = np.round(rng.uniform(0, 36, (2, 80)), 1)
+    dx = px[:, None] - sx[None, :]
+    dy = py[:, None] - sy[None, :]
+    d = np.sqrt(dx * dx + dy * dy)
+    assert np.array_equal(
+        joins._topk_columns(d, 3), np.argsort(d, axis=1, kind="stable")[:, :3]
+    )
+
+
 def test_knn_join_matches_bruteforce(spark, ddb):
     pts = synth.page_points(spark, SF_DIR).limit(40)
     gaz = synth.gazetteer(spark)
